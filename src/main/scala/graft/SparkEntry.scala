@@ -112,8 +112,7 @@ object SparkEntry {
     // for the next), and one static shutdown hook reaps the last.
     val work = freshCrawlWorkDir()
     val eng = new CrawlEngine(spark, pagesDf, work,
-      robotsBodies = graft.fixtures.SiteGen.robotsRows(hosts).toMap,
-      settings = CrawlEngine.Settings(bloomExpectedPerShard = 100000L))
+      robotsBodies = graft.fixtures.SiteGen.robotsRows(hosts).toMap)
     eng.run(Seq(CrawlConfig(
       jobId = "flagship", seeds = Seq(graft.fixtures.SiteGen.pageUrl(0, 0)),
       strategy = "all", maxDepth = 12, limit = limit,
@@ -1343,8 +1342,7 @@ object SparkEntry {
             "<html><body>leaf</body></html>".getBytes("UTF-8"))
       }.toDF("url", "html")
       val work = freshCrawlWorkDir()
-      val eng = new CrawlEngine(s, pagesDf, work, robotsBodies = Map.empty,
-        settings = CrawlEngine.Settings(bloomExpectedPerShard = 100000L))
+      val eng = new CrawlEngine(s, pagesDf, work)
       eng.run(Seq(CrawlConfig(
         jobId = "rankjob", seeds = Seq(seedUrl), strategy = "all",
         maxDepth = 1, limit = 300, hostBudgetPerStep = 16, politenessWaves = 4,

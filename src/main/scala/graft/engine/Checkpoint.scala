@@ -13,12 +13,16 @@ import scala.collection.parallel.CollectionConverters._
  * with summary properties is the drop-in production backend — no Iceberg
  * jars ship in this sandbox, so we mimic its commit protocol):
  *
- *   frontier/gen=N/   parquet  pending frontier at the START of generation N
+ *   frontier/gen=N/   parquet  frontier at the START of generation N; rows
+ *                              flagged `__fresh` are the seen keys it added
  *   results/gen=N/    parquet  fetch results produced BY generation N
- *   seen/gen=N/       parquet  (jobId, urlNorm) newly enqueued in generation N
- *   bloom/gen=N.bin   bytes    serialized SeenBloom AFTER generation N
+ *   seen/bucket=<from>-<to>-L<level>/
+ *                     parquet  compacted seen keys of generations from..to,
+ *                              with `_blooms/` filter sidecars and the
+ *                              `_COMPACT_OK` validity marker
  *   manifest/gen=N.json        commit record (atomic rename) — a generation
  *                              EXISTS iff its manifest file exists
+ *   _nonce                     per-crawl nonce embedded in sidecar names
  *
  * Crash mid-generation => no manifest => the generation's partial output
  * directories are overwritten on replay (idempotent, exactly-once results).
@@ -59,8 +63,6 @@ final class Checkpoint(workDir: String) {
 
   def frontierPath(gen: Int): String = s"$workDir/frontier/gen=$gen"
   def resultsPath(gen: Int): String = s"$workDir/results/gen=$gen"
-  def bloomPath(gen: Int): Path = Paths.get(s"$workDir/bloom/gen=$gen.bin")
-  def bloomDeltaPath(gen: Int): Path = Paths.get(s"$workDir/bloom/delta=$gen.bin")
   private def manifestPath(gen: Int): Path = Paths.get(s"$workDir/manifest/gen=$gen.json")
 
   // ---- cancellation markers (DELETE /v1/crawl/:jobId analog): a file per
@@ -84,45 +86,15 @@ final class Checkpoint(workDir: String) {
       .toSet
   }
 
-  /**
-   * Commit a generation. The seen-bloom is checkpointed INCREMENTALLY: the
-   * generation's fresh-key hashes (8 bytes per new URL — the same longs the
-   * frontier-write accumulator shipped) are always written as a delta file;
-   * the full serialized filter only lands on snapshot generations. At the
-   * design scale (1e10 keys, ~12 GB filter) the old full-serialize-per-
-   * generation was itself a superstep-dominating write; deltas are KBs.
-   * Resume = latest snapshot + replay of later deltas (bloom insertion is
-   * an idempotent OR, so replay order is irrelevant).
-   */
-  def commit(m: GenManifest, bloomSnapshot: Option[Array[Byte]],
-      bloomDelta: Seq[Long]): Unit = {
+  /** Commit a generation: write its manifest and atomically rename it into
+    * place. No filter state is checkpointed — the seen filters are the
+    * bucket sidecars, durable with their buckets. */
+  def commit(m: GenManifest): Unit = {
     Files.createDirectories(Paths.get(s"$workDir/manifest"))
-    Files.createDirectories(Paths.get(s"$workDir/bloom"))
-    val db = java.nio.ByteBuffer.allocate(bloomDelta.length * 8)
-    bloomDelta.foreach(db.putLong)
-    Files.write(bloomDeltaPath(m.generation), db.array())
-    bloomSnapshot.foreach(bytes => Files.write(bloomPath(m.generation), bytes))
     val tmp = Paths.get(s"$workDir/manifest/.gen=${m.generation}.json.tmp")
     Files.writeString(tmp, Serialization.write(m))
     Files.move(tmp, manifestPath(m.generation), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** Rebuild the seen-bloom as of `gen`: nearest snapshot at or below, plus
-    * the delta files of every later committed generation. */
-  def loadBloom(gen: Int): graft.frontier.SeenBloom = {
-    val snapGen = (gen to 0 by -1).find(g => Files.exists(bloomPath(g)))
-      .getOrElse(throw new IllegalStateException(s"no bloom snapshot <= gen $gen under $workDir"))
-    val bloom = graft.frontier.SeenBloom.deserialize(Files.readAllBytes(bloomPath(snapGen)))
-    ((snapGen + 1) to gen).foreach { g =>
-      val p = bloomDeltaPath(g)
-      if (Files.exists(p)) {
-        val bytes = Files.readAllBytes(p)
-        val bb = java.nio.ByteBuffer.wrap(bytes)
-        while (bb.remaining() >= 8) bloom.putHash(bb.getLong)
-      }
-    }
-    bloom
   }
 
   /**
@@ -186,7 +158,7 @@ final class Checkpoint(workDir: String) {
     * Consequence, pinned by CrawlEngineSpec: run() with a previously
     * cancelled jobId over the same workDir finalizes immediately. */
   def reset(): Unit = {
-    Seq("manifest", "bloom", "frontier", "results", "seen").foreach { sub =>
+    Seq("manifest", "frontier", "results", "seen").foreach { sub =>
       val dir = Paths.get(s"$workDir/$sub")
       if (Files.exists(dir)) deleteRecursively(dir)
     }
@@ -195,17 +167,6 @@ final class Checkpoint(workDir: String) {
   /** Delete uncommitted generation directories > `gen` and compactions that
     * were written after the last committed generation (crash cleanup). */
   def truncateAfter(gen: Int): Unit = {
-    val bloomDir = Paths.get(s"$workDir/bloom")
-    if (Files.exists(bloomDir)) {
-      Files.list(bloomDir).iterator().asScala
-        .filter { p =>
-          val n = p.getFileName.toString
-          val num = n.stripPrefix("gen=").stripPrefix("delta=").stripSuffix(".bin")
-          (n.startsWith("gen=") || n.startsWith("delta=")) &&
-            scala.util.Try(num.toInt).toOption.exists(_ > gen)
-        }
-        .foreach(deleteRecursively)
-    }
     Seq("frontier", "results", "seen").foreach { sub =>
       val dir = Paths.get(s"$workDir/$sub")
       if (Files.exists(dir)) {

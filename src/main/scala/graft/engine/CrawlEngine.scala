@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.{Extractor, Robots, UrlOps}
-import graft.frontier.SeenBloom
+import graft.frontier.{SeenBloom, SidecarBlooms}
 
 /**
  * The Spark-native crawl engine: AnyCrawl's worker/queue/Redis orchestration
@@ -16,7 +16,7 @@ import graft.frontier.SeenBloom
  *   fetch:     equi-join of the batch against the pages corpus          J1
  *   extract:   single mapPartitions HTML kernel (all formats, 1 parse)  F5-F8
  *   expand:    posexplode links -> scope/path/depth/robots filters      P2-P5
- *   dedup:     in-batch reduce + bloom pre-filter + exact anti-join     J2/A8
+ *   dedup:     in-batch reduce + bloom sidecars + exact anti-join       J2/A8
  *   account:   tiny per-job aggregates -> finalize decision             A1-A3
  *   commit:    frontier/results/seen parquet + manifest (atomic)        S5/S7
  *
@@ -26,7 +26,8 @@ import graft.frontier.SeenBloom
  * local[8] vs a sequential oracle).
  *
  * Scale notes (10^10-URL design): no driver-side collections beyond per-job
- * counters; the seen set is append-only parquet + sharded bloom; all top-k
+ * counters; the seen set is append-only parquet whose compaction buckets
+ * carry sharded bloom sidecars (no filter on the driver); all top-k
  * filters are two-phase (salted pre-rank then exact rank over <= 32*k rows
  * per key) so a hot host holding 30% of the frontier never lands in one
  * window partition.
@@ -150,8 +151,8 @@ final class CrawlEngine(
   private var generation: Int = 0
   /** Pending-frontier size after the last superstep (from the write-riding
     * accumulator). Drives the adaptive small-step plan: below
-    * `saltMinBatch` pending rows the salted pre-rank phases and the bloom
-    * broadcast cost more than the skew/shuffle they prevent, so the
+    * `saltMinBatch` pending rows the salted pre-rank phases cost more than
+    * the skew they prevent, so the
     * superstep takes the single-phase exact path (identical semantics).
     * Unknown (resume) => Long.MaxValue => conservative two-phase. */
   private var lastPendTotal: Long = Long.MaxValue
@@ -165,7 +166,6 @@ final class CrawlEngine(
     * parallelism/retry-deterministic by construction. Empty unless a job
     * opted in. Test-visible for the gate specs. */
   private[engine] var trapCrossed: Set[String] = Set.empty
-  private var bloom: SeenBloom = _
   private var configs: Map[String, CrawlConfig] = Map.empty
   /** Sidecar-bloom cache nonce (see [[Checkpoint.newNonce]]); assigned by
     * run()/resume() before any compaction or probe can happen. */
@@ -182,15 +182,14 @@ final class CrawlEngine(
     configs = jobs.map(c => c.jobId -> c).toMap
     refreshBroadcasts()
     seenNonce = ckpt.newNonce()
-    // run() means a FRESH crawl: drop every generation, bucket, bloom file
-    // and manifest a previous crawl left under this workDir — otherwise
+    // run() means a FRESH crawl: drop every generation, bucket and
+    // manifest a previous crawl left under this workDir — otherwise
     // seenSources would fold a dead crawl's frontier tails into this run's
     // dedup, and a crash before this run's first commit could resume() the
     // dead crawl off its stale manifests.
     ckpt.reset()
     progress = jobs.map(c => c.jobId -> JobProgress(c.jobId)).toMap
     seqOffsets = jobs.map(c => c.jobId -> 0L).toMap
-    bloom = new SeenBloom(settings.bloomShards, settings.bloomExpectedPerShard, settings.bloomFpp)
     generation = 0
 
     // ---- generation 0 bootstrap: seeds become the first frontier
@@ -204,8 +203,6 @@ final class CrawlEngine(
           c.priorityOf.map(f => f(norm)).getOrElse(i.toLong), "", 0)) else None
       }
     }.distinct
-    if (settings.seenFilter == "driver")
-      seedEntries.foreach(e => bloom.put(e.jobId + "-" + e.urlNorm))
     progress = progress.map { case (j, p) =>
       j -> p.copy(enqueued = seedEntries.count(_.jobId == j).toLong)
     }
@@ -230,11 +227,8 @@ final class CrawlEngine(
       throw new IllegalStateException(s"no committed generation under $workDir"))
     progress = m.progress.map(p => p.jobId -> p).toMap
     seqOffsets = m.seqOffsets
-    // sidecar mode keeps no driver filter (the whole point) — its durable
-    // state is the bucket sidecars themselves, already on disk
-    bloom =
-      if (settings.seenFilter == "driver") ckpt.loadBloom(m.generation)
-      else new SeenBloom(settings.bloomShards, settings.bloomExpectedPerShard, settings.bloomFpp)
+    // no filter state to restore: the seen filters are the bucket sidecars,
+    // already on disk
     generation = m.generation + 1
     lastPendTotal = Long.MaxValue // unknown -> conservative two-phase plans
     ckpt.truncateAfter(generation) // drop partial output of a crashed gen
@@ -253,19 +247,17 @@ final class CrawlEngine(
     * silently unreachable at test batch sizes; see `useBloom`). */
   var sidecarProbeSteps: Int = 0
 
-  /** Write one seen bucket (2-column parquet), build its bloom sidecars in
-    * sidecar mode and its trap-count sidecar when any job runs the trap
-    * gate, then validity-mark it. Marker last => crash-invisible. */
+  /** Write one seen bucket (2-column parquet), build its bloom sidecars and
+    * its trap-count sidecar when any job runs the trap gate, then
+    * validity-mark it. Marker last => crash-invisible. */
   private def writeSeenBucket(b: Checkpoint.SeenBucket, src: DataFrame): Unit = {
     val nPart = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     src.repartition(nPart, $"jobId", $"urlNorm")
       .write.mode("overwrite").parquet(ckpt.seenBucketPath(b))
     val rows = ckpt.committedRowCount(ckpt.seenBucketPath(b), spark.sessionState.newHadoopConf())
     compactionLog += ((b, rows))
-    if (settings.seenFilter == "sidecar") {
-      graft.frontier.SidecarBlooms.buildForBucket(spark, ckpt.seenBucketPath(b),
-        settings.sidecarShards, settings.bloomFpp, rows, seenNonce, hadoopConfB)
-    }
+    SidecarBlooms.buildForBucket(spark, ckpt.seenBucketPath(b),
+      settings.sidecarShards, settings.bloomFpp, rows, seenNonce, hadoopConfB)
     // trap-count sidecar (the q63 gate at bucket scale): pre-aggregated
     // (jobId, host, template, n) rows live INSIDE the bucket dir (the `_`
     // prefix hides them from the bucket's own parquet listing), so they are
@@ -992,7 +984,7 @@ final class CrawlEngine(
     // sidecar probing engages once compaction has produced filter-carrying
     // buckets; before that (or below bloomMinBatch) everything goes to the
     // exact anti-join, whose right side is then only the small tail
-    val sidecarProbe = settings.seenFilter == "sidecar" && useBloom && bucketPaths.nonEmpty
+    val sidecarProbe = useBloom && bucketPaths.nonEmpty
     if (sidecarProbe) sidecarProbeSteps += 1
     val enqueuedTotal = progress.values.map(_.enqueued).sum
     // SMALL steps with a seen set small enough to broadcast take a
@@ -1039,11 +1031,12 @@ final class CrawlEngine(
         }
       } else {
         // in-batch dedup: canonical-min entry per (jobId, urlNorm) (U1).
-        // One hash shuffle + a partition-local sorted first-per-key scan. In
-        // sidecar mode the shuffle keys on shard-of-key instead — equal keys
-        // still co-locate (the shard is a pure function of the key), and each
-        // task then probes only its own shards' sidecar filters (executor-
-        // cached across supersteps) rather than every shard of every bucket.
+        // One hash shuffle + a partition-local sorted first-per-key scan.
+        // When the sidecars are probed the shuffle keys on shard-of-key
+        // instead — equal keys still co-locate (the shard is a pure function
+        // of the key), and each task then probes only its own shards'
+        // sidecar filters (executor-cached across supersteps) rather than
+        // every shard of every bucket.
         val dedupKeyed =
           if (sidecarProbe) {
             // BIGINT-only arithmetic (ANSI-safe); for power-of-two shard
@@ -1066,12 +1059,11 @@ final class CrawlEngine(
           }
 
         // ------------------------------- seen-set dedup: bloom + exact (J2)
-        // driver mode: the broadcast SeenBloom covers EVERY seen key, so
-        // bloom negatives are final. sidecar mode (VERDICT r2 #2): per-bucket
-        // shard filters live next to the compacted seen parquet and are
-        // probed executor-locally — the driver never holds any filter — but
-        // they cover only bucketed generations, so bloom negatives still take
-        // an exact anti-join against the (small, recent) frontier tail.
+        // per-bucket shard filters live next to the compacted seen parquet
+        // and are probed executor-locally — the driver never holds any
+        // filter — but they cover only bucketed generations, so bloom
+        // negatives still take an exact anti-join against the (small,
+        // recent) frontier tail.
         val tagged =
           if (sidecarProbe) {
             val hcB = hadoopConfB
@@ -1079,17 +1071,11 @@ final class CrawlEngine(
             // the shard-keyed repartition above means only a handful); the
             // missing-file => maybe-seen contract lives in SidecarBlooms,
             // spec-pinned there, not re-implemented here
-            val probe = graft.frontier.SidecarBlooms.taskLocalProbe(
+            val probe = SidecarBlooms.taskLocalProbe(
               bucketPaths.toArray, settings.sidecarShards, seenNonce,
               () => hcB.value.value)
             val mightContain = udf { (jobId: String, urlNorm: String) =>
               probe(SeenBloom.hash64(jobId + "-" + urlNorm))
-            }
-            cand.withColumn("__maybe", mightContain($"jobId", $"urlNorm"))
-          } else if (useBloom && settings.seenFilter == "driver") {
-            val bloomB = spark.sparkContext.broadcast(bloom)
-            val mightContain = udf { (jobId: String, urlNorm: String) =>
-              bloomB.value.mightContain(jobId + "-" + urlNorm)
             }
             cand.withColumn("__maybe", mightContain($"jobId", $"urlNorm"))
           } else cand.withColumn("__maybe", lit(true))
@@ -1144,19 +1130,15 @@ final class CrawlEngine(
     if (timing) System.err.println(f"[timing] gen=$gen plan-build ${(System.nanoTime() - tExp) / 1e9}%.2f s")
     // One write commits the whole step's frontier state: deferred + retries
     // + fresh rows, with fresh flagged `__fresh` (the seen table IS the
-    // flagged frontier history — no separate seen write). Three per-job
-    // signals ride the same action as accumulators instead of three separate
-    // jobs: pending counts (finalize decision), fresh counts (enqueued
-    // accounting), and the 64-bit hashes of fresh keys (driver-side bloom
-    // insert — see SeenBloom scaladoc). The stage is consumed by exactly
-    // this one action, so updates merge exactly once.
+    // flagged frontier history — no separate seen write). Two per-job
+    // signals ride the same action as accumulators instead of separate
+    // jobs: pending counts (finalize decision) and fresh counts (enqueued
+    // accounting). The stage is consumed by exactly this one action, so
+    // updates merge exactly once.
     val pendAcc = new CrawlEngine.LongMapAcc
     val freshAcc = new CrawlEngine.LongMapAcc
-    val hashAcc = new CrawlEngine.LongsAcc
     spark.sparkContext.register(pendAcc, s"crawl-pending-gen$gen")
     spark.sparkContext.register(freshAcc, s"crawl-fresh-gen$gen")
-    spark.sparkContext.register(hashAcc, s"crawl-hashes-gen$gen")
-    val needHashes = settings.seenFilter == "driver" // sidecar mode ships no hashes back
     val nextFrontier = carried.map(CrawlEngine.FrontierRowF.of(_, fresh = false))
       .unionByName(fresh.map(CrawlEngine.FrontierRowF.of(_, fresh = true)))
       .mapPartitions { it =>
@@ -1166,11 +1148,7 @@ final class CrawlEngine(
           if (dbl) pendAcc.add(r.jobId -> 1L)
           if (r.__fresh) {
             freshAcc.add(r.jobId -> 1L)
-            if (needHashes) hashAcc.add(SeenBloom.hash64(r.jobId + "-" + r.urlNorm))
-            if (dbl) {
-              freshAcc.add(r.jobId -> 1L)
-              if (needHashes) hashAcc.add(SeenBloom.hash64(r.jobId + "-" + r.urlNorm))
-            }
+            if (dbl) freshAcc.add(r.jobId -> 1L)
           }
           r
         }
@@ -1200,36 +1178,24 @@ final class CrawlEngine(
     extracted.unpersist(false)
     if (actualBatch == 0L) return false
     // Same footer reconciliation as the results barrier: the pending /
-    // fresh / hash counters rode the frontier write; a re-executed task
-    // inflates them (duplicate bloom hashes are harmless — insertion is an
-    // idempotent OR — but enqueued accounting and the finalize decision are
-    // not). Recompute from the committed frontier parquet on mismatch.
-    val (pendCounts, freshCounts, freshHashes) = {
+    // fresh counters rode the frontier write, and a re-executed task
+    // inflates them (enqueued accounting and the finalize decision would go
+    // wrong). Recompute from the committed frontier parquet on mismatch.
+    val (pendCounts, freshCounts) = {
       val p0 = pendAcc.value
       val committedRows = ckpt.committedRowCount(ckpt.frontierPath(gen + 1), hconf)
-      if (p0.values.sum == committedRows) (p0, freshAcc.value, hashAcc.value)
+      if (p0.values.sum == committedRows) (p0, freshAcc.value)
       else {
         System.err.println(s"[crawl] gen=$gen frontier accumulator total ${p0.values.sum} != " +
           s"committed $committedRows (task re-execution); recomputing from committed parquet")
         val fr = spark.read.schema(frontierSchema).parquet(ckpt.frontierPath(gen + 1))
         val rows = fr.groupBy($"jobId").agg(count(lit(1)).as("p"),
           sum(when($"__fresh", 1L).otherwise(0L)).as("fr")).collect()
-        // the per-URL hash rebuild collects one generation's FRESH
-        // (jobId, urlNorm) strings — inherent to driver-broadcast seen mode
-        // (that mode holds a hash per fresh URL by definition, so this is
-        // no bigger than the filter it repairs). The sidecar mode — the
-        // 10^9-10^10-key deployment shape — never ships hashes to the
-        // driver (needHashes=false) and skips this collect entirely: its
-        // recovery is the J-row aggregate above alone.
-        val hs = if (!needHashes) Nil
-          else fr.where($"__fresh").select($"jobId", $"urlNorm").as[(String, String)]
-            .collect().map { case (j, u) => SeenBloom.hash64(j + "-" + u) }.toSeq
         (rows.map(r => r.getString(0) -> r.getLong(1)).toMap,
-          rows.map(r => r.getString(0) -> r.getLong(2)).toMap, hs)
+          rows.map(r => r.getString(0) -> r.getLong(2)).toMap)
       }
     }
     lastPendTotal = pendCounts.values.sum
-    if (needHashes) freshHashes.foreach(bloom.putHash)
     freshCounts.foreach { case (j, n) =>
       progress += j -> progress(j).copy(enqueued = progress(j).enqueued + n)
     }
@@ -1252,15 +1218,7 @@ final class CrawlEngine(
       partitionLineage = lineageOut,
       fetchedPages = actualBatch,
       extractedDocs = statJobs.toSeq.map(j => stat(j, "succ")).sum,
-      wallMillis = System.currentTimeMillis() - t0),
-      // full filter snapshot only on the compaction cadence; other
-      // generations persist just the fresh-hash delta (see Checkpoint).
-      // sidecar mode checkpoints NO filter state at all — its filters are
-      // the per-bucket sidecar files, durable with the buckets themselves
-      bloomSnapshot = if (needHashes &&
-          (settings.compactEvery <= 0 || gen % math.max(1, settings.compactEvery) == 0))
-        Some(bloom.serialized) else None,
-      bloomDelta = if (needHashes) freshHashes else Nil) }
+      wallMillis = System.currentTimeMillis() - t0)) }
 
     true
   }
@@ -1396,8 +1354,7 @@ object CrawlEngine {
   final case class Settings(
       pagesUrlColumn: String = "url",
       pagesHtmlColumn: String = "html",
-      bloomShards: Int = 4,
-      bloomExpectedPerShard: Long = 1000000L,
+      // false-positive rate of each seen-bucket bloom sidecar
       bloomFpp: Double = 0.01,
       saltBuckets: Int = 32,
       maxGenerations: Int = 1000,
@@ -1406,13 +1363,10 @@ object CrawlEngine {
       jobTtlMs: Long = 3L * 60 * 60 * 1000,
       clockMs: () => Long = () => System.currentTimeMillis(),
       bloomMinBatch: Long = 65536L,
-      // "driver": one SeenBloom lives on the driver and is broadcast into
-      // the candidate filter (fine through ~1e9 keys with incremental
-      // checkpoints). "sidecar": NO node ever holds the full filter — each
-      // seen-compaction bucket carries per-shard bloom files probed
-      // executor-locally after a shard-keyed candidate shuffle (the 1e10-key
-      // deployment shape; see SidecarBlooms).
-      seenFilter: String = "driver",
+      // seen filter: NO node ever holds the full filter — each
+      // seen-compaction bucket carries `sidecarShards` per-shard bloom files
+      // probed executor-locally after a shard-keyed candidate shuffle (see
+      // SidecarBlooms)
       sidecarShards: Int = 32,
       // single-task-per-job ceiling for the one-pass expansion fast path
       // (candidates ~ pending x branching must fit one task comfortably)
@@ -1442,7 +1396,11 @@ object CrawlEngine {
       // stage's `explain("formatted")` (first occurrence per stage key)
       // into `capturedPlans`. Analysis-only — never forces execution — and
       // off by default: production supersteps pay zero cost.
-      capturePlans: Boolean = false)
+      capturePlans: Boolean = false) {
+    // standalone SeenBloom shape, read only by perfbench's filter probe
+    val bloomShards: Int = 4
+    val bloomExpectedPerShard: Long = 1000000L
+  }
 
   final case class SeqEntry(jobId: String, url: String, urlNorm: String, host: String,
       depth: Int, priority: Long, parentUrl: String, attempt: Int, seq: Long)
@@ -1470,20 +1428,6 @@ object CrawlEngine {
   object FrontierRowF {
     def of(e: FrontierEntry, fresh: Boolean): FrontierRowF =
       FrontierRowF(e.jobId, e.url, e.urlNorm, e.host, e.depth, e.priority, e.parentUrl, e.attempt, fresh)
-  }
-
-  /** Growable Long-array accumulator (fresh-key hashes riding a write). */
-  final class LongsAcc extends org.apache.spark.util.AccumulatorV2[Long, Seq[Long]] {
-    private val buf = scala.collection.mutable.ArrayBuffer[Long]()
-    override def isZero: Boolean = buf.isEmpty
-    override def copy(): LongsAcc = {
-      val c = new LongsAcc; c.buf ++= buf; c
-    }
-    override def reset(): Unit = buf.clear()
-    override def add(v: Long): Unit = buf += v
-    override def merge(o: org.apache.spark.util.AccumulatorV2[Long, Seq[Long]]): Unit =
-      buf ++= o.asInstanceOf[LongsAcc].buf
-    override def value: Seq[Long] = buf.toSeq
   }
 
   /** Per-key Long counter accumulator (per-job counters folded into write

@@ -6,11 +6,12 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 
 /**
- * Per-bucket bloom SIDECARS — the at-scale evolution of the driver-resident
- * [[SeenBloom]] (SURVEY §2.4 A8). At the reference's design scale (10^10
- * frontier keys, ~12 GB of filter at 1% fpp) no single node can hold or
- * broadcast the seen filter; instead each seen-compaction bucket carries its
- * own filter, sharded by `hash % shards`, as files under
+ * Per-bucket bloom SIDECARS — the crawl engine's URL-seen filter, the
+ * approximate pre-filter in front of the exact anti-join (SURVEY §2.4 A8).
+ * At the reference's design scale (10^10 frontier keys, ~12 GB of filter at
+ * 1% fpp) no single node can hold or broadcast the seen filter; instead each
+ * seen-compaction bucket carries its own filter, sharded by `hash % shards`,
+ * as files under
  * `bucket=<range>/_blooms/shard=<s>.<nonce>.blm` (the `_` prefix keeps
  * parquet readers from listing them, like `_SUCCESS`).
  *
@@ -39,7 +40,7 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
  * (shipped to tasks via a broadcast [[graft.core.SerializableHadoopConf]]):
  * a bare `new Configuration()` would drop `spark.hadoop.*` overlays — fs
  * credentials, a non-default `fs.defaultFS` — and resolve the wrong
- * filesystem on exactly the multi-node deployments sidecar mode exists for.
+ * filesystem on exactly the multi-node deployments sidecars exist for.
  * The caller owns the broadcast (one per engine run, not one per bucket
  * build — the leveled compactor builds dozens of buckets per long crawl).
  *
@@ -48,8 +49,7 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
  */
 object SidecarBlooms {
 
-  /** Shard of a 64-bit key hash — must match [[SeenBloom]]'s fold so both
-    * filter families shard identically. */
+  /** Shard of a 64-bit key hash; [[SeenBloom]] shards by the same fold. */
   def shardOf(h: Long, shards: Int): Int = {
     val x = (h ^ (h >>> 32)).toInt
     ((x % shards) + shards) % shards

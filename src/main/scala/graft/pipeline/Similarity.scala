@@ -154,8 +154,10 @@ object Similarity {
       case r => r.getLong(0)
     }
     // dimension probe (one LocalLimit-1 job) feeds the BYTE budget: the
-    // effective count cap is min(maxCentroids, maxCentroidBytes/(dim*8))
-    val dim = df.select(size(col(vecCol))).head(1).headOption.map(_.getInt(0)).getOrElse(0)
+    // effective count cap is min(maxCentroids, maxCentroidBytes/(dim*8)).
+    // Null vectors are skipped: under ANSI mode size(NULL) is NULL.
+    val dim = df.where(col(vecCol).isNotNull).select(size(col(vecCol)))
+      .head(1).headOption.map(_.getInt(0)).getOrElse(0)
     val stride = boundedCentEvery(maxId, centEvery,
       centroidCountCap(maxCentroids, maxCentroidBytes, dim))
     val cents: Array[(Long, Array[Double])] = collectCentroids(df, vecCol, idCol, stride)
@@ -178,7 +180,9 @@ object Similarity {
     val centsB = spark.sparkContext.broadcast(centsNorm)
     val probeB = spark.sparkContext.broadcast(probeCids.toSet)
     val queryB = spark.sparkContext.broadcast(query.toArray)
-    df.select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
+    // a null vector belongs to no list and has no score
+    df.where(col(vecCol).isNotNull)
+      .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
       .as[(Long, Array[Double])]
       .mapPartitions { it =>
         val cs = centsB.value; val probes = probeB.value; val q = queryB.value
@@ -216,7 +220,7 @@ object Similarity {
     * `maxCentroids` vectors. */
   def collectCentroids(df: DataFrame, vecCol: String, idCol: String,
       stride: Long): Array[(Long, Array[Double])] = df
-    .filter(col(idCol) % stride === 0)
+    .filter(col(idCol) % stride === 0 && col(vecCol).isNotNull)
     .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
     .collect()
     .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))

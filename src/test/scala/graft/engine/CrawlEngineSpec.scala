@@ -31,8 +31,11 @@ class CrawlEngineSpec extends AnyFunSuite {
   private def tmpDir(tag: String): String =
     Files.createTempDirectory(s"crawl-$tag").toString
 
-  private def settings = CrawlEngine.Settings(
-    bloomShards = 2, bloomExpectedPerShard = 10000L, bloomFpp = 0.01, saltBuckets = 8)
+  private def settings = CrawlEngine.Settings(bloomFpp = 0.01, saltBuckets = 8)
+
+  /** The engine checkpoints no seen-filter state: no `bloom/` directory. */
+  private def assertNoBloomDir(dir: String): Unit =
+    assert(!Files.exists(java.nio.file.Paths.get(dir, "bloom")), s"bloom/ written under $dir")
 
   private def engineTrace(e: CrawlEngine): Seq[SequentialOracle.TraceRow] = {
     e.trace().collect().map { r =>
@@ -269,6 +272,8 @@ class CrawlEngineSpec extends AnyFunSuite {
     assertTraceEqual(engineTrace(resumed), engineTrace(full))
     val pf = full.finalProgress("j10"); val pr = resumed.finalProgress("j10")
     assert((pf.enqueued, pf.done, pf.succeeded, pf.failed) == ((pr.enqueued, pr.done, pr.succeeded, pr.failed)))
+    assertNoBloomDir(dirFull)
+    assertNoBloomDir(dirCut)
   }
 
   test("resume across a wave-batched superstep boundary (politenessWaves > 1)") {
@@ -368,7 +373,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     // broadcastBatchMax=0 keeps the small-step fast path (which would skip
     // the probe in favor of its broadcast exact join) out of the way;
     // aggressive compaction so buckets (and their sidecars) actually form
-    val sSide = settings.copy(seenFilter = "sidecar", sidecarShards = 4,
+    val sSide = settings.copy(sidecarShards = 4,
       compactEvery = 2, levelFanout = 2, bloomMinBatch = 0L, broadcastBatchMax = 0L)
     val dir = tmpDir("jsc")
     val engine = new CrawlEngine(spark, pagesDf, dir, Map.empty, sSide)
@@ -377,14 +382,8 @@ class CrawlEngineSpec extends AnyFunSuite {
     assertTraceEqual(engineTrace(engine), oracle.trace)
     val seen = engine.seenSet().collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(seen == oracle.seen)
-    // the driver checkpointed NO filter state: no snapshots, empty deltas
-    val bloomDir = java.nio.file.Paths.get(dir, "bloom")
-    val bloomFiles = java.nio.file.Files.list(bloomDir).iterator()
-    bloomFiles.forEachRemaining { p =>
-      val n = p.getFileName.toString
-      assert(!n.startsWith("gen="), s"unexpected bloom snapshot $n in sidecar mode")
-      if (n.startsWith("delta=")) assert(java.nio.file.Files.size(p) == 0L)
-    }
+    // the driver checkpointed NO filter state
+    assertNoBloomDir(dir)
     // sidecar filter files exist under the surviving buckets
     val blms = java.nio.file.Files.walk(java.nio.file.Paths.get(dir, "seen")).iterator()
     var found = 0
@@ -403,6 +402,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     assertTraceEqual(engineTrace(resumed), oracle.trace)
     val seenB = resumed.seenSet().collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(seenB == oracle.seen)
+    assertNoBloomDir(dirB)
   }
 
   test("engine reuse: a second run() on the same instance uses the SECOND run's configs and state") {

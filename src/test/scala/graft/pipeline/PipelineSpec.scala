@@ -337,6 +337,35 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("IVF topK under ANSI mode: a null first vector is skipped, not probed") {
+    val n = 200
+    val dim = 16
+    val vecs = spark.range(n).map { i =>
+      val arr = Array.tabulate(dim)(d =>
+        ((graft.fixtures.SiteGen.mix(i, d.toLong) % 1000L) / 500.0 - 1.0).toFloat)
+      (i, arr)
+    }.toDF("vec_id", "embedding")
+    val q = (0 until dim).map(d =>
+      (graft.fixtures.SiteGen.mix(999L, d.toLong) % 1000L) / 500.0 - 1.0)
+    // vec_id 0 (a centroid id at stride 20) with a null vector, placed in
+    // the first partition so the dimension probe meets it first
+    val rest = vecs.where($"vec_id" =!= 0L)
+    val withNull = Seq(0L).toDF("vec_id")
+      .withColumn("embedding", lit(null).cast("array<float>"))
+      .unionByName(rest)
+    assert(withNull.head().isNullAt(1))
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try {
+      val got = Similarity.ivfTopK(withNull, "embedding", "vec_id", q, 10,
+        centEvery = 20, nprobe = 4).select("vec_id").as[Long].collect().toSeq
+      val want = Similarity.ivfTopK(rest, "embedding", "vec_id", q, 10,
+        centEvery = 20, nprobe = 4).select("vec_id").as[Long].collect().toSeq
+      assert(got.length == 10)
+      assert(got == want)
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+  }
+
   test("decontamination: distinct 13-gram hits, threshold, boundary non-hits") {
     val bench13 = (0 until 13).map(j => s"bt$j").mkString(" ")   // exactly 13 words -> 1 shingle
     val bench15 = (0 until 15).map(j => s"ct$j").mkString(" ")   // 15 words -> 3 shingles
