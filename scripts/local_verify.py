@@ -2,10 +2,11 @@
 """Local mirror of the driver's DuckDB correctness compare.
 
 Usage: python3 scripts/local_verify.py <sfDir> <outDir> [q1,q2,...]
-Run `sbt "runMain graft.Verify <sfDir> <outDir> [subset]"` first (or pass
---run to do it here). Compares each <outDir>/<name> parquet against the
-oracle SQL in <outDir>/oracle_sql.json executed by DuckDB over the sfDir
-tables, the driver way: sort columns by name, hash row values.
+Run `sbt "runMain graft.Verify <sfDir> <outDir> [subset]"` first. Compares
+each <outDir>/<name> parquet against the oracle SQL in
+<outDir>/oracle_sql.json executed by DuckDB over the sfDir tables, the
+driver way: sort columns by name, hash row values. Exits 1 when any oracle
+fails.
 """
 import sys, os, json, glob
 import duckdb
@@ -66,6 +67,7 @@ def main():
         print(('PASS ' if ok else 'FAIL ') + name + ('' if ok else ' ' + json.dumps(res)[:600]))
     bad = [k for k, v in results.items() if not (v.get('hash_match') and v.get('schema_match'))]
     print(f"== {len(results)-len(bad)}/{len(results)} green" + (f"; failing: {bad}" if bad else ""))
+    return 1 if bad else 0
 
 if __name__ == '__main__':
-    main()
+    sys.exit(main())

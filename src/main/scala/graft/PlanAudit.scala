@@ -179,7 +179,7 @@ object PlanAudit {
     val base = CrawlEngine.Settings(capturePlans = true)
     val fastGear = run(base)
     val wideGear = run(base.copy(
-      fastExpandMaxPend = 0L, saltMinBatch = 0L, broadcastBatchMax = 0L))
+      fastExpandMaxPend = 0L, wideMinRows = 0L))
     Some(fastGear ++ wideGear.view.filterKeys(k => !fastGear.contains(k)).toMap)
   }
 }

@@ -74,17 +74,17 @@ final class CrawlEngine(
     val nDefault = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val cnt = pages.count()
     // Count-based sizing ONLY while every possible batch still takes the
-    // broadcast fetch path (batch <= corpus <= broadcastBatchMax). Beyond
+    // broadcast fetch path (batch <= corpus <= wideMinRows). Beyond
     // that the shuffled-hash join kicks in, and its exchange reuse demands
     // the corpus partitioning EQUAL spark.sql.shuffle.partitions — any other
     // count re-shuffles the whole corpus every generation (measured: 12 s/
     // generation at 100k pages x 8 cores). shuffle.partitions is the knob
     // that scales both sides together on a real cluster.
     val parts =
-      if (cnt <= settings.broadcastBatchMax)
-        math.min(nDefault.toLong, math.max(1L, cnt / settings.corpusRowsPerPartition + 1L)).toInt
+      if (cnt <= settings.wideMinRows)
+        math.min(nDefault.toLong, math.max(1L, cnt / CrawlEngine.CorpusRowsPerPartition + 1L)).toInt
       else nDefault
-    pages.select(col(settings.pagesUrlColumn).as("__purl"), col(settings.pagesHtmlColumn).as("__phtml"))
+    pages.select(col("url").as("__purl"), col("html").as("__phtml"))
       .repartition(parts, col("__purl"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
@@ -150,11 +150,10 @@ final class CrawlEngine(
   // ------------------------------------------------------------------ state
   private var generation: Int = 0
   /** Pending-frontier size after the last superstep (from the write-riding
-    * accumulator). Drives the adaptive small-step plan: below
-    * `saltMinBatch` pending rows the salted pre-rank phases cost more than
-    * the skew they prevent, so the
-    * superstep takes the single-phase exact path (identical semantics).
-    * Unknown (resume) => Long.MaxValue => conservative two-phase. */
+    * accumulator). Picks the superstep's gear: below `wideMinRows` pending
+    * rows the salted pre-rank phases cost more than the skew they prevent,
+    * so the superstep takes the small-step plans (identical semantics).
+    * Unknown (resume) => Long.MaxValue => the wide gear. */
   private var lastPendTotal: Long = Long.MaxValue
 
   private var progress: Map[String, JobProgress] = Map.empty
@@ -244,7 +243,7 @@ final class CrawlEngine(
 
   /** Supersteps whose dedup engaged the executor-side sidecar bloom probe —
     * test-visible proof the probe path actually ran (the gating once made it
-    * silently unreachable at test batch sizes; see `useBloom`). */
+    * silently unreachable at test batch sizes; see `sidecarProbe`). */
   var sidecarProbeSteps: Int = 0
 
   /** Write one seen bucket (2-column parquet), build its bloom sidecars and
@@ -321,21 +320,19 @@ final class CrawlEngine(
     configs.values.toSeq.filter(c => !progress(c.jobId).finalized).sortBy(_.jobId)
 
   /** Rebuild [[trapCrossed]] from the committed seen sources of `gen`, run
-    * only when an active job opted into the trap gate and the refresh
-    * cadence is due (always on `force`, e.g. at resume, where the committed
-    * history may already contain crossed families). Cost shape: bucketed
-    * generations contribute their PRE-AGGREGATED count sidecars (O(distinct
-    * templates) rows, written at compaction); only the frontier TAIL —
-    * bounded by the compaction cadence — is template-derived here, so a
-    * refresh is O(templates + tail), never O(total seen). A bucket written
-    * while the gate was off lacks the sidecar and is derived on the fly
-    * (once — its next merge writes one). */
-  private def refreshTrapSet(gen: Int, force: Boolean = false): Unit = {
+    * every generation once an active job opted into the trap gate (so a
+    * resume rebuilds it from the committed history before scheduling).
+    * Cost shape: bucketed generations contribute their PRE-AGGREGATED count
+    * sidecars (O(distinct templates) rows, written at compaction); only the
+    * frontier TAIL — bounded by the compaction cadence — is template-derived
+    * here, so a refresh is O(templates + tail), never O(total seen). A
+    * bucket written while the gate was off lacks the sidecar and is derived
+    * on the fly (once — its next merge writes one). */
+  private def refreshTrapSet(gen: Int): Unit = {
     val caps = activeJobs.collect {
       case c if c.trapMaxUrls > 0 => c.jobId -> c.trapMaxUrls.toLong
     }.toMap
     if (caps.isEmpty) return
-    if (!force && gen % math.max(1, settings.trapRefreshEvery) != 0) return
     import graft.frontier.Traps
     def derive(df: DataFrame): DataFrame = df
       .select($"jobId", Traps.hostCol($"urlNorm").as("h"),
@@ -369,12 +366,6 @@ final class CrawlEngine(
     var gen = generation
     applyCancellations()
     applyExpiry()
-    // resume may land mid-cadence with crossed families already committed —
-    // force one refresh off the last committed state before scheduling.
-    // Skipped when the loop's own cadence-gated refresh is about to run
-    // anyway (its seenSources(gen) strictly covers seenSources(gen - 1)).
-    if (gen > 0 && gen % math.max(1, settings.trapRefreshEvery) != 0)
-      refreshTrapSet(gen - 1, force = true)
     while (activeJobs.nonEmpty && gen < settings.maxGenerations) {
       // NOTE: each generation re-roots from parquet deliberately — carrying
       // a persisted Dataset across supersteps embeds the previous plan into
@@ -383,7 +374,7 @@ final class CrawlEngine(
       // the just-written frontier was tried and reverted: recache-on-write
       // hits a Spark internal NPE, and the parquet re-read it saves is tens
       // of ms against the OS page cache.)
-      refreshTrapSet(gen) // cadence-gated; no-op unless a job opted in
+      refreshTrapSet(gen) // no-op unless a job opted in
       val frontier = spark.read.schema(frontierSchema).parquet(ckpt.frontierPath(gen))
         .select("jobId", "url", "urlNorm", "host", "depth", "priority", "parentUrl", "attempt")
         .as[FrontierEntry]
@@ -442,7 +433,11 @@ final class CrawlEngine(
     }
   }
 
-  /** Small steps run with AQE off, restored after. Every exchange AQE
+  /** Picks the superstep's gear ONCE: wide when the pending frontier has
+    * reached `wideMinRows`, small otherwise. Every gear-dependent choice of
+    * the step (schedule plan, results-write overlap, AQE) keys on it.
+    *
+    * Small steps run with AQE off, restored after. Every exchange AQE
     * materializes is a separate job round-trip on the driver; a small-step
     * generation has ~6 exchanges of a few hundred rows whose plans are
     * already final (joins hint-pinned broadcast, partitioning coalesced by
@@ -452,20 +447,22 @@ final class CrawlEngine(
     * coalescing. Scoped set + restore: the engine owns the session for the
     * duration of the superstep (run() is single-threaded per engine).
     */
-  private def superstep(gen: Int, frontier: Dataset[FrontierEntry]): Boolean =
-    if (lastPendTotal >= settings.saltMinBatch) superstepBody(gen, frontier)
+  private def superstep(gen: Int, frontier: Dataset[FrontierEntry]): Boolean = {
+    val wide = lastPendTotal >= settings.wideMinRows
+    if (wide) superstepBody(gen, frontier, wide)
     else {
       val key = "spark.sql.adaptive.enabled"
       val was = spark.conf.getOption(key)
       spark.conf.set(key, "false")
-      try superstepBody(gen, frontier)
+      try superstepBody(gen, frontier, wide)
       finally was match {
         case Some(v) => spark.conf.set(key, v)
         case None => spark.conf.unset(key)
       }
     }
+  }
 
-  private def superstepBody(gen: Int, frontier: Dataset[FrontierEntry]): Boolean = {
+  private def superstepBody(gen: Int, frontier: Dataset[FrontierEntry], wide: Boolean): Boolean = {
     val t0 = System.currentTimeMillis()
     val tSched = System.nanoTime()
     val active = activeJobs
@@ -489,7 +486,7 @@ final class CrawlEngine(
     // politeness: top hostBudget per (job, host), limit: top remaining per
     // job (P6/W1), both in canonical order, then per-job seq assignment.
     //
-    // SMALL steps (pending < saltMinBatch) take a one-exchange plan: shuffle
+    // SMALL steps (pending < wideMinRows) take a one-exchange plan: shuffle
     // the pending set by jobId once and run the whole schedule — canonical
     // sort, per-host budget walk, per-job limit prefix, seq numbering — as a
     // single in-memory pass per job partition (a job's pending rows are
@@ -500,10 +497,9 @@ final class CrawlEngine(
     // limit cut is a prefix (in canonical order) of the politeness
     // survivors, which is exactly what the ordered walk emits.
     //
-    // LARGE steps keep the two-phase salted windows (hot-host skew safety)
+    // WIDE steps keep the two-phase salted windows (hot-host skew safety)
     // + distributed sort + manual two-pass indexing: deterministic under
     // any parallelism, no single-partition window, no driver data.
-    val smallStep = lastPendTotal < settings.saltMinBatch
     val needPoliteness = active.exists(c => c.hostBudgetPerStep != Int.MaxValue ||
       (c.crawlDelayEpochSeconds > 0 && robotsRules.nonEmpty))
     val remaining = active.map { c =>
@@ -520,11 +516,11 @@ final class CrawlEngine(
     // job runs before the fetch — the count rides the results write's
     // accumulator (footer-reconciled), the per-partition lineage comes from
     // the committed results files themselves, and the join strategy is
-    // unconditionally broadcast (batch <= pending < saltMinBatch <=
-    // broadcastBatchMax). Saves one Spark job + one AQE shuffle stage per
-    // generation — at ~15 BFS generations that was ~15% of q24's floor.
+    // unconditionally broadcast (batch <= pending < wideMinRows). Saves one
+    // Spark job + one AQE shuffle stage per generation — at ~15 BFS
+    // generations that was ~15% of q24's floor.
     val (seqedBase, seqedCache, batchCount, lineage) =
-      if (smallStep) {
+      if (!wide) {
         val bb = budgetB
         val wb = wavesB
         val cfgBv = cfgB
@@ -608,7 +604,7 @@ final class CrawlEngine(
               if (b >= Int.MaxValue.toLong) Long.MaxValue else b * wb.value(j)
             }.apply($"jobId", $"__pk")
             val w2 = Window.partitionBy($"jobId", $"__pk").orderBy(ordCols: _*)
-            val salt = pmod(xxhash64($"urlNorm"), lit(settings.saltBuckets))
+            val salt = pmod(xxhash64($"urlNorm"), lit(CrawlEngine.SaltBuckets))
             val w1 = Window.partitionBy($"jobId", $"__pk", salt).orderBy(ordCols: _*)
             pend.toDF()
               .withColumn("__pk", keyCol)
@@ -626,7 +622,7 @@ final class CrawlEngine(
           else {
             val remCol = jobLookup(remaining)($"jobId")
             val w2 = Window.partitionBy($"jobId").orderBy(waveOrd: _*)
-            val salt = pmod(xxhash64($"urlNorm"), lit(settings.saltBuckets))
+            val salt = pmod(xxhash64($"urlNorm"), lit(CrawlEngine.SaltBuckets))
             val w1 = Window.partitionBy($"jobId", salt).orderBy(waveOrd: _*)
             polite
               .withColumn("__r1", row_number().over(w1)).filter($"__r1" <= remCol).drop("__r1")
@@ -694,10 +690,10 @@ final class CrawlEngine(
     // large batches take the shuffled-hash path with the batch as build
     // side. Both pinned by hint — AQE flip-flopping near thresholds made
     // benchmarks bimodal.
-    // batchCount == -1 (deferred, small-step) implies batch < saltMinBatch
-    // <= broadcastBatchMax -> broadcast unconditionally
+    // batchCount == -1 (deferred, small-step) implies batch < wideMinRows
+    // -> broadcast unconditionally
     val fetchLeft =
-      if (batchCount <= settings.broadcastBatchMax) seqed.hint("broadcast")
+      if (batchCount <= settings.wideMinRows) seqed.hint("broadcast")
       else seqed.hint("shuffle_hash")
     val hit = fetchLeft
       .join(pagesPrepared, seqed("urlNorm") === pagesPrepared("__purl"), "inner")
@@ -707,7 +703,7 @@ final class CrawlEngine(
         seqed("jobId") === col("__mj") && seqed("urlNorm") === col("__mu"), "left_anti")
       .withColumn("__phtml", lit(null).cast("binary"))
     val fetched = hit.unionByName(miss)
-    capturePlan(if (batchCount <= settings.broadcastBatchMax) "fetch-join-broadcast"
+    capturePlan(if (batchCount <= settings.wideMinRows) "fetch-join-broadcast"
       else "fetch-join-shuffled-hash", fetched)
 
     // ------------------------------------------------------- extract kernel
@@ -810,7 +806,7 @@ final class CrawlEngine(
       extracted.write.mode("overwrite").parquet(ckpt.resultsPath(gen))
     }
     val resultsFut: Option[java.util.concurrent.Future[Unit]] =
-      if (smallStep) {
+      if (!wide) {
         val sess = spark
         Some(CrawlEngine.resultsWritePool.submit(new java.util.concurrent.Callable[Unit] {
           def call(): Unit = {
@@ -951,18 +947,6 @@ final class CrawlEngine(
         }
       }
 
-    // The bloom pre-filter pays for itself only when the candidate set is
-    // large (it kills shuffle width ahead of the exact anti-join). Below
-    // `bloomMinBatch` scheduled rows the filter costs more than the shuffle
-    // it saves, so small supersteps go straight to the exact anti-join.
-    // batchCount == -1 means the count was deferred to the write barrier
-    // (small-step plan) — gate on the previous pending total instead, the
-    // same surrogate that chose the small-step plan. Comparing the raw -1
-    // would make `bloomMinBatch = 0` (the test override that forces the
-    // sidecar probe path at test-sized batches) silently inert on every
-    // small step, leaving the probe path unexercised below prod scale.
-    val useBloom =
-      (if (batchCount >= 0L) batchCount else lastPendTotal) >= settings.bloomMinBatch
     val (seenBuckets, tailPaths) = ckpt.seenSources(gen)
     val bucketPaths = seenBuckets.map(ckpt.seenBucketPath)
     val bucketsDfOpt: Option[DataFrame] =
@@ -981,11 +965,6 @@ final class CrawlEngine(
       c.jobId -> room
     }.toMap
     val capNeeded = active.exists(c => c.limit > 0)
-    // sidecar probing engages once compaction has produced filter-carrying
-    // buckets; before that (or below bloomMinBatch) everything goes to the
-    // exact anti-join, whose right side is then only the small tail
-    val sidecarProbe = useBloom && bucketPaths.nonEmpty
-    if (sidecarProbe) sidecarProbeSteps += 1
     val enqueuedTotal = progress.values.map(_.enqueued).sum
     // SMALL steps with a seen set small enough to broadcast take a
     // one-exchange expansion (same shape as the scheduling fast path):
@@ -998,7 +977,7 @@ final class CrawlEngine(
     // at 16k pending x 16 links that single task serializes 256k rows,
     // which measurably throttled the 32-core scaling bench.
     val fastExpand = lastPendTotal < settings.fastExpandMaxPend &&
-      enqueuedTotal < settings.broadcastBatchMax
+      enqueuedTotal < settings.wideMinRows
 
     val fresh: Dataset[FrontierEntry] =
       if (fastExpand) {
@@ -1037,6 +1016,14 @@ final class CrawlEngine(
         // of the key), and each task then probes only its own shards'
         // sidecar filters (executor-cached across supersteps) rather than
         // every shard of every bucket.
+        // The bloom pre-filter pays for itself only when the candidate set
+        // is large (it kills shuffle width ahead of the exact anti-join), so
+        // it engages at `wideMinRows` scheduled rows (a small step's
+        // deferred count -1 never does) once compaction has produced
+        // filter-carrying buckets; otherwise everything goes to the exact
+        // anti-join, whose right side is then only the small tail.
+        val sidecarProbe = batchCount >= settings.wideMinRows && bucketPaths.nonEmpty
+        if (sidecarProbe) sidecarProbeSteps += 1
         val dedupKeyed =
           if (sidecarProbe) {
             // BIGINT-only arithmetic (ANSI-safe); for power-of-two shard
@@ -1095,7 +1082,7 @@ final class CrawlEngine(
         if (capNeeded) {
           val capCol = jobLookup(capMap)($"jobId")
           val w2 = Window.partitionBy($"jobId").orderBy(ordCols: _*)
-          val salt = pmod(xxhash64($"urlNorm"), lit(settings.saltBuckets))
+          val salt = pmod(xxhash64($"urlNorm"), lit(CrawlEngine.SaltBuckets))
           val w1 = Window.partitionBy($"jobId", salt).orderBy(ordCols: _*)
           out = out.toDF()
             .withColumn("__r1", row_number().over(w1)).filter($"__r1" <= capCol).drop("__r1")
@@ -1118,7 +1105,7 @@ final class CrawlEngine(
     val resKeys = res.select($"jobId".as("__rj"), $"urlNorm".as("__ru"),
       $"terminal".as("__rterm"), ($"attempt" + 1).as("__rnext"))
     val resKeysHinted =
-      if (batchCount <= settings.broadcastBatchMax) resKeys.hint("broadcast")
+      if (batchCount <= settings.wideMinRows) resKeys.hint("broadcast")
       else resKeys.hint("shuffle_hash")
     val carried = pend.toDF()
       .join(resKeysHinted, $"jobId" === $"__rj" && $"urlNorm" === $"__ru", "left_outer")
@@ -1157,7 +1144,7 @@ final class CrawlEngine(
     // frontier written as 32+ files makes every later read of it — next
     // gen's frontier scan plus up to compactEvery tail scans per anti-join —
     // pay per-file listing/footer latency. Gated on fastExpandMaxPend, not
-    // saltMinBatch: coalesce collapses the whole post-shuffle expansion
+    // wideMinRows: coalesce collapses the whole post-shuffle expansion
     // stage to 4 tasks, which is only safe when candidates are small too.
     val frontierOut =
       if (lastPendTotal < settings.fastExpandMaxPend) nextFrontier.coalesce(4) else nextFrontier
@@ -1351,18 +1338,22 @@ object CrawlEngine {
       val t = new Thread(r, "graft-results-write"); t.setDaemon(true); t
     })
 
+  /** Salt fan-out of the wide gear's two-phase windows: the pre-rank runs
+    * over (key, salt) so a hot host never lands in one window partition. */
+  private val SaltBuckets = 32
+  /** Corpus rows per cached partition while every batch takes the broadcast
+    * fetch: the extraction kernel runs in the corpus-probe stage, so corpus
+    * partitions ARE the extraction parallelism — 4096 left a 2k-page bench
+    * corpus in ONE cached partition and serialized the kernel (measured
+    * 0.5s/gen -> 0.15). */
+  private val CorpusRowsPerPartition = 256L
+
   final case class Settings(
-      pagesUrlColumn: String = "url",
-      pagesHtmlColumn: String = "html",
-      // false-positive rate of each seen-bucket bloom sidecar
-      bloomFpp: Double = 0.01,
-      saltBuckets: Int = 32,
       maxGenerations: Int = 1000,
       compactEvery: Int = 8,
       // jobExpireAt default: creation + 3h (db/schemas/PostgreSQL.ts:79)
       jobTtlMs: Long = 3L * 60 * 60 * 1000,
       clockMs: () => Long = () => System.currentTimeMillis(),
-      bloomMinBatch: Long = 65536L,
       // seen filter: NO node ever holds the full filter — each
       // seen-compaction bucket carries `sidecarShards` per-shard bloom files
       // probed executor-locally after a shard-keyed candidate shuffle (see
@@ -1378,25 +1369,19 @@ object CrawlEngine {
       // / fetch-failure stage retry / evicted-cache rebuild) whose updates
       // were already merged — the footer reconciliation must absorb it
       chaosAccumulatorDoubleFire: Boolean = false,
-      saltMinBatch: Long = 65536L,
-      // 256 rows/partition below the broadcast threshold: the extraction
-      // kernel runs in the corpus-probe stage, so corpus partitions ARE the
-      // extraction parallelism — 4096 left a 2k-page bench corpus in ONE
-      // cached partition and serialized the kernel (measured 0.5s/gen -> 0.15)
-      corpusRowsPerPartition: Long = 256L,
-      broadcastBatchMax: Long = 65536L,
-      // trap-gate refresh cadence in generations (only jobs with
-      // trapMaxUrls > 0 pay it). A refresh reads the per-bucket trap-count
-      // sidecars (pre-aggregated at compaction — O(distinct templates))
-      // and template-derives only the frontier tail, so its cost is
-      // O(templates + tail), never O(total seen); 1 is fine even at
-      // 10^10-frontier scale, raise it only to shave driver actions.
-      trapRefreshEvery: Int = 1,
       // plan-audit hook (PlanAudit / PLANS.md): record each superstep
       // stage's `explain("formatted")` (first occurrence per stage key)
       // into `capturedPlans`. Analysis-only — never forces execution — and
       // off by default: production supersteps pay zero cost.
-      capturePlans: Boolean = false) {
+      capturePlans: Boolean = false,
+      // the one gear threshold. A superstep whose pending frontier holds at
+      // least this many rows takes the wide gear: salted-window schedule,
+      // AQE on, sequential results write. Batches and corpora up to this
+      // size broadcast their joins; a batch this large also probes the
+      // seen-bucket sidecars. 0 forces the wide gear at test sizes.
+      wideMinRows: Long = 65536L) {
+    // false-positive rate of each seen-bucket bloom sidecar
+    val bloomFpp: Double = 0.01
     // standalone SeenBloom shape, read only by perfbench's filter probe
     val bloomShards: Int = 4
     val bloomExpectedPerShard: Long = 1000000L

@@ -79,8 +79,9 @@ final case class CrawlConfig(
     // dropped at expansion. 0 = disabled — the default, and the reference
     // has no such gate (additive surface), so crawl traces stay reference-
     // exact unless a job opts in. The gate reads COMMITTED state, so it
-    // lags by up to Settings.trapRefreshEvery generations (BSP-inherent);
-    // overshoot is bounded by the lag's enqueue volume, never unbounded.
+    // lags one generation (BSP-inherent: the refresh before each superstep
+    // sees everything enqueued up to the previous one); overshoot is
+    // bounded by one generation's enqueue volume, never unbounded.
     trapMaxUrls: Int = 0,
     // sitemap fan-out (sitemaps.org discovery, Sitemap.scala): when a
     // fetched body's root tag is <urlset>/<sitemapindex>, its entries —

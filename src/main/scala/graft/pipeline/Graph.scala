@@ -153,11 +153,12 @@ object Graph {
     while (!converged && iter < maxIterations) {
       // Two formulations of the same star steps, picked per round from the
       // edge count the fingerprint already measured (the engine's
-      // saltMinBatch pattern): below the threshold a window-min pipeline —
-      // 3 exchanges per round, with the per-node neighbor partition an
-      // acceptable single task at that size; above it the groupBy-min +
-      // equi-join pipeline — ~2x the exchanges but map-side partial
-      // aggregation, so a node with 10^8 neighbors never lands in one task.
+      // wideMinRows gear pattern): below the threshold a window-min
+      // pipeline — 3 exchanges per round, with the per-node neighbor
+      // partition an acceptable single task at that size; above it the
+      // groupBy-min + equi-join pipeline — ~2x the exchanges but map-side
+      // partial aggregation, so a node with 10^8 neighbors never lands in
+      // one task.
       val small = starRound(e, useWindow = eFp._1 <= windowMaxEdges)
         .transform(stepCheckpoint)
 

@@ -96,9 +96,12 @@ object Similarity {
     bits.reduce(_ + _)
   }
 
-  /** Dimension of the vector column, from one bounded point-read. */
+  /** Dimension of the vector column, from one bounded point-read of the
+    * first non-null vector (under ANSI mode `size(NULL)` is NULL); 0 for a
+    * frame with no non-null vector. */
   def vecDim(df: DataFrame, vecCol: String): Int =
-    df.select(size(col(vecCol))).head().getInt(0)
+    df.where(col(vecCol).isNotNull).select(size(col(vecCol)))
+      .head(1).headOption.map(_.getInt(0)).getOrElse(0)
 
   /** The centroid-selection stride that keeps the driver-collected centroid
     * set bounded at `maxCentroids` REGARDLESS of corpus size: the caller's
@@ -134,11 +137,11 @@ object Similarity {
     * (TakeOrderedAndProject).
     *
     * The collect is BOUNDED for any corpus — in BYTES, not just count: one
-    * map-side-combinable `max(id)` aggregate (8 bytes to the driver) plus
-    * a 1-row dimension probe feed [[boundedCentEvery]] via
+    * map-side-combinable `max(id)`, `max(size(vec))` aggregate (16 bytes to
+    * the driver) feeds [[boundedCentEvery]] via
     * [[centroidCountCap]], which widens the stride until the centroid set
     * fits BOTH `maxCentroids` (default 2^20) AND `maxCentroidBytes`
-    * (default 256 MB) at the corpus's dimension — so a dim-768 corpus caps
+    * (default 256 MB) at the corpus's widest vector — so a dim-768 corpus caps
     * at ~43k centroids instead of a silent ~6 GB of driver heap. At 10^9
     * rows with the default stride the original code collected 2×10^7
     * vectors; this caps the collect no matter what the caller passes. At 100 TB the assignment
@@ -149,15 +152,13 @@ object Similarity {
   def ivfTopK(df: DataFrame, vecCol: String, idCol: String,
       query: Seq[Double], k: Int, centEvery: Long = 50, nprobe: Int = 4,
       maxCentroids: Long = 1L << 20, maxCentroidBytes: Long = 256L << 20): DataFrame = {
-    val maxId = df.agg(max(col(idCol).cast("long"))).head() match {
-      case r if r.isNullAt(0) => 0L
-      case r => r.getLong(0)
-    }
-    // dimension probe (one LocalLimit-1 job) feeds the BYTE budget: the
-    // effective count cap is min(maxCentroids, maxCentroidBytes/(dim*8)).
-    // Null vectors are skipped: under ANSI mode size(NULL) is NULL.
-    val dim = df.where(col(vecCol).isNotNull).select(size(col(vecCol)))
-      .head(1).headOption.map(_.getInt(0)).getOrElse(0)
+    // the widest vector's dimension rides the same scan and feeds the BYTE
+    // budget: the effective count cap is min(maxCentroids,
+    // maxCentroidBytes/(dim*8)). max skips null sizes (size(NULL) is NULL
+    // under ANSI mode, -1 otherwise; a size <= 0 means dimension 0).
+    val stats = df.agg(max(col(idCol).cast("long")), max(size(col(vecCol)))).head()
+    val maxId = if (stats.isNullAt(0)) 0L else stats.getLong(0)
+    val dim = if (stats.isNullAt(1)) 0 else math.max(0, stats.getInt(1))
     val stride = boundedCentEvery(maxId, centEvery,
       centroidCountCap(maxCentroids, maxCentroidBytes, dim))
     val cents: Array[(Long, Array[Double])] = collectCentroids(df, vecCol, idCol, stride)

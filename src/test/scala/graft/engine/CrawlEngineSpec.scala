@@ -31,7 +31,7 @@ class CrawlEngineSpec extends AnyFunSuite {
   private def tmpDir(tag: String): String =
     Files.createTempDirectory(s"crawl-$tag").toString
 
-  private def settings = CrawlEngine.Settings(bloomFpp = 0.01, saltBuckets = 8)
+  private def settings = CrawlEngine.Settings()
 
   /** The engine checkpoints no seen-filter state: no `bloom/` directory. */
   private def assertNoBloomDir(dir: String): Unit =
@@ -46,10 +46,11 @@ class CrawlEngineSpec extends AnyFunSuite {
     }.toSeq.sortBy(t => (t.jobId, t.seq))
   }
 
-  private def runBoth(cfg: CrawlConfig, robots: Map[String, String] = Map.empty)
+  private def runBoth(cfg: CrawlConfig, robots: Map[String, String] = Map.empty,
+      st: CrawlEngine.Settings = settings)
       : (Seq[SequentialOracle.TraceRow], SequentialOracle.Result, CrawlEngine) = {
     val dir = tmpDir(cfg.jobId)
-    val engine = new CrawlEngine(spark, pagesDf, dir, robots, settings)
+    val engine = new CrawlEngine(spark, pagesDf, dir, robots, st)
     engine.run(Seq(cfg))
     val oracle = SequentialOracle.crawl(pagesByNorm, Seq(cfg), robots)
     (engineTrace(engine), oracle, engine)
@@ -369,12 +370,12 @@ class CrawlEngineSpec extends AnyFunSuite {
 
   test("sidecar seen-filter: trace/seen exact, zero driver filter state, resume without snapshots") {
     val cfg = CrawlConfig("jsc", Seq("https://host0.example.test/p0.html"), limit = 40)
-    // bloomMinBatch=0 forces sidecar probing even at test-sized batches and
-    // broadcastBatchMax=0 keeps the small-step fast path (which would skip
-    // the probe in favor of its broadcast exact join) out of the way;
+    // wideMinRows=0 forces the wide gear, and with it sidecar probing, even
+    // at test-sized batches (it also keeps the fast expansion, which would
+    // skip the probe in favor of its broadcast exact join, out of the way);
     // aggressive compaction so buckets (and their sidecars) actually form
     val sSide = settings.copy(sidecarShards = 4,
-      compactEvery = 2, levelFanout = 2, bloomMinBatch = 0L, broadcastBatchMax = 0L)
+      compactEvery = 2, levelFanout = 2, wideMinRows = 0L)
     val dir = tmpDir("jsc")
     val engine = new CrawlEngine(spark, pagesDf, dir, Map.empty, sSide)
     engine.run(Seq(cfg))
@@ -512,7 +513,10 @@ class CrawlEngineSpec extends AnyFunSuite {
     // deterministic PRNG over the scheduler-semantics knobs: strategy,
     // depth, limit, politeness budget, wave batching. Every draw must agree
     // with the oracle on the full canonical trace, the seen set, and the
-    // progress counters — the scheduler has no "easy" configurations.
+    // progress counters — the scheduler has no "easy" configurations. Each
+    // draw runs in the small gear test sizes take and again forced into the
+    // wide gear (salted-window schedule, shuffled joins, wide expansion).
+    val wideGear = settings.copy(wideMinRows = 0L, fastExpandMaxPend = 0L)
     val rnd = new scala.util.Random(20260818L)
     val strategies = Seq("all", "same-domain", "same-hostname", "same-origin")
     (0 until 8).foreach { k =>
@@ -524,14 +528,17 @@ class CrawlEngineSpec extends AnyFunSuite {
         limit = if (rnd.nextBoolean()) 0 else 1 + rnd.nextInt(60),
         hostBudgetPerStep = if (rnd.nextBoolean()) Int.MaxValue else 1 + rnd.nextInt(6),
         politenessWaves = 1 + rnd.nextInt(4))
-      val (got, oracle, engine) = runBoth(cfg)
-      assertTraceEqual(got, oracle.trace)
-      val engineSeen = engine.seenSet().collect().map(r => (r.getString(0), r.getString(1))).toSet
-      assert(engineSeen == oracle.seen, s"seen mismatch at draw $k cfg=$cfg")
-      val p = engine.finalProgress(cfg.jobId)
-      val op = oracle.progress(cfg.jobId)
-      assert((p.enqueued, p.done, p.succeeded, p.failed) ==
-        ((op.enqueued, op.done, op.succeeded, op.failed)), s"progress mismatch at draw $k cfg=$cfg")
+      Seq("small" -> settings, "wide" -> wideGear).foreach { case (gear, st) =>
+        val (got, oracle, engine) = runBoth(cfg, st = st)
+        assertTraceEqual(got, oracle.trace)
+        val engineSeen = engine.seenSet().collect().map(r => (r.getString(0), r.getString(1))).toSet
+        assert(engineSeen == oracle.seen, s"seen mismatch at draw $k ($gear gear) cfg=$cfg")
+        val p = engine.finalProgress(cfg.jobId)
+        val op = oracle.progress(cfg.jobId)
+        assert((p.enqueued, p.done, p.succeeded, p.failed) ==
+          ((op.enqueued, op.done, op.succeeded, op.failed)),
+          s"progress mismatch at draw $k ($gear gear) cfg=$cfg")
+      }
     }
   }
 

@@ -45,10 +45,10 @@ class PlanCaptureSpec extends AnyFunSuite {
     eng.capturedPlans.toMap
   }
 
-  private lazy val base = CrawlEngine.Settings(saltBuckets = 8, capturePlans = true)
+  private lazy val base = CrawlEngine.Settings(capturePlans = true)
   private lazy val fastGear = run(base)
   private lazy val wideGear = run(base.copy(
-    fastExpandMaxPend = 0L, saltMinBatch = 0L, broadcastBatchMax = 0L))
+    fastExpandMaxPend = 0L, wideMinRows = 0L))
 
   test("fast gears: broadcast fetch join; expansion has no hash exchange") {
     val fetch = fastGear("fetch-join-broadcast")

@@ -39,22 +39,30 @@ class PolitenessDomainSpec extends AnyFunSuite {
     page("https://b.sitea.test/p", "<html><body>bp</body></html>"),
     page("https://c.siteb.test/p", "<html><body>cp</body></html>"))
 
-  private def settings = CrawlEngine.Settings(bloomFpp = 0.01, saltBuckets = 8)
+  private def settings = CrawlEngine.Settings()
 
   private def cfg(job: String, byDomain: Boolean) = CrawlConfig(job,
     Seq("https://a.sitea.test/"), strategy = "all", limit = 100, maxDepth = 2,
     hostBudgetPerStep = 1, politenessByDomain = byDomain)
 
-  private def run(job: String, byDomain: Boolean,
-      forceWidePath: Boolean = false): Seq[String] = {
+  private def run(job: String, byDomain: Boolean): Seq[String] =
+    runEngine(job, byDomain, forceWidePath = false)._1
+
+  /** (canonical url order, plan keys the run captured) */
+  private def runEngine(job: String, byDomain: Boolean,
+      forceWidePath: Boolean): (Seq[String], Set[String]) = {
     val s = spark; import s.implicits._
-    val st = if (forceWidePath) settings.copy(fastExpandMaxPend = 0L) else settings
+    val st =
+      if (forceWidePath)
+        settings.copy(fastExpandMaxPend = 0L, wideMinRows = 0L, capturePlans = true)
+      else settings
     val e = new CrawlEngine(spark, s.createDataset(corpus).toDF(),
       Files.createTempDirectory("poldom").toString, Map.empty, st)
     e.run(Seq(cfg(job, byDomain)))
-    e.trace().collect()
+    val order = e.trace().collect()
       .map(r => (r.getAs[Long]("seq"), r.getAs[String]("url"))).sortBy(_._1)
       .map(_._2).toSeq
+    (order, e.capturedPlans.keySet.toSet)
   }
 
   private val hostOrder = Seq(
@@ -70,7 +78,9 @@ class PolitenessDomainSpec extends AnyFunSuite {
   }
 
   test("wide (DataFrame window) schedule path agrees") {
-    assert(run("d2", byDomain = true, forceWidePath = true) == domainOrder)
+    val (order, plans) = runEngine("d2", byDomain = true, forceWidePath = true)
+    assert(plans.contains("schedule-wide"), s"wide schedule never ran: $plans")
+    assert(order == domainOrder)
   }
 
   test("engine trace equals the sequential oracle in domain mode") {

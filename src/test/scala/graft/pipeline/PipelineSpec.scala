@@ -366,6 +366,86 @@ class PipelineSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
   }
 
+  /** 200 deterministic `dim`-wide float vectors (vec_id, embedding) and a
+    * query vector: the corpus the IVF/LSH specs above build inline. */
+  private def vectorCorpus(dim: Int): (org.apache.spark.sql.DataFrame, Seq[Double]) = {
+    val vecs = spark.range(200).map { i =>
+      val arr = Array.tabulate(dim)(d =>
+        ((graft.fixtures.SiteGen.mix(i, d.toLong) % 1000L) / 500.0 - 1.0).toFloat)
+      (i, arr)
+    }.toDF("vec_id", "embedding")
+    val q = (0 until dim).map(d =>
+      (graft.fixtures.SiteGen.mix(999L, d.toLong) % 1000L) / 500.0 - 1.0)
+    (vecs, q)
+  }
+
+  test("LSH topK under ANSI mode: a null first vector is skipped, not probed") {
+    val dim = 16
+    val (vecs, q) = vectorCorpus(dim)
+    // the dimension read meets the null vector first
+    val rest = vecs.where($"vec_id" =!= 0L)
+    val withNull = Seq(0L).toDF("vec_id")
+      .withColumn("embedding", lit(null).cast("array<float>"))
+      .unionByName(rest)
+    assert(withNull.head().isNullAt(1))
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try {
+      assert(Similarity.vecDim(withNull, "embedding") == dim)
+      assert(Similarity.vecDim(withNull.limit(0), "embedding") == 0, "empty frame")
+      val got = Similarity.lshTopK(withNull, "embedding", "vec_id", q, 10,
+        planes = 8, probeRadius = 3).select("vec_id").as[Long].collect().toSeq
+      val want = Similarity.lshTopK(rest, "embedding", "vec_id", q, 10,
+        planes = 8, probeRadius = 3).select("vec_id").as[Long].collect().toSeq
+      assert(got.length == 10)
+      assert(got == want)
+      assert(Similarity.lshTopK(withNull.limit(0), "embedding", "vec_id", q, 10)
+        .collect().isEmpty, "empty frame")
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+  }
+
+  /** Spark jobs `f` submits, counted by a listener. The block runs in its own
+    * job group and a marker job in a second group closes it: the listener
+    * bus delivers job starts in submission order, so once the marker has
+    * arrived every job of the block has been counted. */
+  private def jobsRunBy(f: => Unit): Int = {
+    val tag = s"jobs-${java.util.UUID.randomUUID()}"
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(tag, "measured")
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup(tag + "-end", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000L
+      while (!groups.contains(tag + "-end") && System.currentTimeMillis() < deadline)
+        Thread.sleep(5)
+      assert(groups.contains(tag + "-end"), "the listener never saw the marker job")
+      groups.toArray.count(_ == tag)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("IVF topK: the dimension rides the max(id) aggregate, no separate probe job") {
+    val dim = 16
+    val (vecs, q) = vectorCorpus(dim)
+    // the call's eager work is exactly one scalar aggregate plus the
+    // centroid collect (stride 20: no cap binds on this corpus)
+    val aggJobs = jobsRunBy { vecs.agg(max($"vec_id".cast("long"))).head(); () }
+    val centJobs = jobsRunBy { Similarity.collectCentroids(vecs, "embedding", "vec_id", 20L); () }
+    val callJobs = jobsRunBy {
+      Similarity.ivfTopK(vecs, "embedding", "vec_id", q, 10, centEvery = 20, nprobe = 4); ()
+    }
+    assert(aggJobs >= 1 && centJobs >= 1)
+    assert(callJobs == aggJobs + centJobs,
+      s"ivfTopK ran $callJobs jobs; aggregate $aggJobs + centroid collect $centJobs")
+  }
+
   test("decontamination: distinct 13-gram hits, threshold, boundary non-hits") {
     val bench13 = (0 until 13).map(j => s"bt$j").mkString(" ")   // exactly 13 words -> 1 shingle
     val bench15 = (0 until 15).map(j => s"ct$j").mkString(" ")   // 15 words -> 3 shingles
